@@ -40,7 +40,8 @@ object QProbe {
     if (sys.env.contains("QPROBE_JOBS"))
       spark.sparkContext.addSparkListener(
         new org.apache.spark.scheduler.SparkListener {
-          val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+          val t0 =
+            new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
           val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
           override def onJobStart(
               j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
@@ -53,14 +54,18 @@ object QProbe {
           }
           override def onJobEnd(
               j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-            val s = t0.remove(j.jobId)
-            println(f"[job] ${j.jobId}%3d wall=${(j.time - s) / 1e3}%6.2f " +
-              s"${desc.remove(j.jobId)}")
+            // a start the listener never saw (dropped event, late attach)
+            // has no wall time to report; the boxed map value is null then
+            val wall = Option(t0.remove(j.jobId))
+              .fold("     ?")(s => f"${(j.time - s) / 1e3}%6.2f")
+            println(f"[job] ${j.jobId}%3d wall=$wall " +
+              Option(desc.remove(j.jobId)).getOrElse("(start not seen)"))
           }
         })
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val jobWall = new java.util.concurrent.atomic.AtomicLong
-    val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val jobStart =
+      new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
@@ -69,8 +74,8 @@ object QProbe {
         }
         override def onJobEnd(
             j: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-          val s = jobStart.remove(j.jobId)
-          if (s != 0L) jobWall.addAndGet(j.time - s)
+          Option(jobStart.remove(j.jobId))
+            .foreach(s => jobWall.addAndGet(j.time - s))
         }
       })
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")

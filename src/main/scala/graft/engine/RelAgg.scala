@@ -1,13 +1,7 @@
 package graft.engine
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
-/** Per-(gidA,gidB) relation state, aggregated in one pass.
-  *
-  * Replaces six countDistinct aggregates (which Catalyst plans as a 7x
-  * EXPAND of every sub-pair row) with small sub-id bitsets — the Spark
-  * analogue of the reference's _sub* staging maps
+/** Per-(gidA,gidB) relation state of the [[RelAgg]] fold: unbounded sub-id
+  * bitsets — the analogue of the reference's _sub* staging maps
   * (reference: src/spatialjoin/Sweeper.h:422-445).
   */
 final case class RelState(
@@ -20,7 +14,14 @@ final case class RelState(
     var contA: Array[Long], var contB: Array[Long],
     var eqA: Array[Long], var eqB: Array[Long])
 
-object RelAgg extends Aggregator[FlagRow, RelState, RelVerdict] {
+/** Plain fold (zero / reduce / finish) of sub-pair [[FlagRow]]s into the
+  * reference's multi-geometry verdict (Sweeper.cpp:788-1059). The join
+  * does not use it — its merge is SpatialJoin's packed partial-state
+  * merge — so the `st_*` functions and the brute-force oracles that fold
+  * through it ([[graft.sql.GeoFuns.verdict]]) stay independent of the
+  * join's merge code.
+  */
+object RelAgg {
 
   private def set(bits: Array[Long], i: Int): Array[Long] = {
     val w = i >> 6
@@ -28,15 +29,6 @@ object RelAgg extends Aggregator[FlagRow, RelState, RelVerdict] {
       else java.util.Arrays.copyOf(bits, w + 1)
     b(w) |= 1L << (i & 63)
     b
-  }
-
-  private def orBits(x: Array[Long], y: Array[Long]): Array[Long] = {
-    if (y.length > x.length) orBits(y, x)
-    else {
-      var i = 0
-      while (i < y.length) { x(i) |= y(i); i += 1 }
-      x
-    }
   }
 
   private def card(x: Array[Long]): Int = {
@@ -48,11 +40,11 @@ object RelAgg extends Aggregator[FlagRow, RelState, RelVerdict] {
 
   private val EMPTY = new Array[Long](0)
 
-  override def zero: RelState = RelState(0, 0,
+  def zero: RelState = RelState(0, 0,
     false, false, false, false, false, false, false, false,
     EMPTY, EMPTY, EMPTY, EMPTY, EMPTY, EMPTY)
 
-  override def reduce(s: RelState, f: FlagRow): RelState = {
+  def reduce(s: RelState, f: FlagRow): RelState = {
     s.nA = math.max(s.nA, f.nA); s.nB = math.max(s.nB, f.nB)
     s.isect ||= f.isect
     s.touch ||= f.touch; s.notTouch ||= f.notTouch
@@ -67,19 +59,7 @@ object RelAgg extends Aggregator[FlagRow, RelState, RelVerdict] {
     s
   }
 
-  override def merge(a: RelState, b: RelState): RelState = {
-    a.nA = math.max(a.nA, b.nA); a.nB = math.max(a.nB, b.nB)
-    a.isect ||= b.isect
-    a.touch ||= b.touch; a.notTouch ||= b.notTouch
-    a.llCross ||= b.llCross; a.laAB ||= b.laAB; a.laBA ||= b.laBA
-    a.overlap ||= b.overlap; a.notCross ||= b.notCross
-    a.covA = orBits(a.covA, b.covA); a.covB = orBits(a.covB, b.covB)
-    a.contA = orBits(a.contA, b.contA); a.contB = orBits(a.contB, b.contB)
-    a.eqA = orBits(a.eqA, b.eqA); a.eqB = orBits(a.eqB, b.eqB)
-    a
-  }
-
-  override def finish(s: RelState): RelVerdict = {
+  def finish(s: RelState): RelVerdict = {
     val covCntA = card(s.covA); val covCntB = card(s.covB)
     val coversAB = covCntB == s.nB
     val coversBA = covCntA == s.nA
@@ -98,10 +78,6 @@ object RelAgg extends Aggregator[FlagRow, RelState, RelVerdict] {
       overlapsAB = (s.overlap || partial) && !coversAB && !coversBA &&
         !s.llCross)
   }
-
-  override def bufferEncoder: Encoder[RelState] = Encoders.product[RelState]
-  override def outputEncoder: Encoder[RelVerdict] =
-    Encoders.product[RelVerdict]
 }
 
 final case class RelVerdict(

@@ -10,10 +10,6 @@ final case class SpatialConfig(
     mode: String = "predicates", // predicates | de9im | distance
     withinDist: Double = -1.0,
     selfJoin: Boolean = true,
-    /** UNUSED since round 2 (kept for source compat): big geometries now
-      * get a coarser-level cell cover instead of a broadcast join — see
-      * SpatialJoin.cellCover. */
-    bigCellThreshold: Int = 64,
     /** override the adaptive cell size (int coords); <=0 = adaptive. */
     cellSize: Long = -1L,
     /** duplicate->reference rewrite (P9): lines/polygons with at least
@@ -170,35 +166,23 @@ object SpatialJoin {
     coalesce(terms :+ lit(15): _*)
   }
 
-  /** Output schema of [[cellCover]]: the SubGeom columns (bbox PADDED in
-    * distance mode) plus (nlvl, lvl, cell). */
-  val coverSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    org.apache.spark.sql.Encoders.product[SubGeom].schema
-      .add("nlvl", IntegerType, nullable = false)
-      .add("lvl", IntegerType, nullable = false)
-      .add("cell", LongType, nullable = false)
-  }
-
   /** Multi-level cell cover: each sub-geometry emits its bbox-range cover
     * at its native level and at every coarser ACTIVE level (levels some
     * geometry is native to), with the level packed into the cell key. A
     * pair (a,b) is examined exactly once: in the first common cell at
-    * level max(a.nlvl, b.nlvl). Returns (exploded cover, cell size).
+    * level max(a.nlvl, b.nlvl). Returns (exploded cover, cell size): the
+    * SubGeom columns (bbox PADDED in distance mode) plus (nlvl, lvl, cell).
     *
-    * Dispatches to [[cellCoverSql]] by default (see its doc for the
-    * measured 5x verdict); the mapPartitions generator below is retained
-    * as the GRAFT_COVER=gen measurement alternate, pinned to identical
-    * output by the EngineOpsSpec enumeration test. */
-  /** Catalyst-chain cover — the DEFAULT. Measured 5x faster than the
-    * hand-written mapPartitions generator at 1 core (4.2 vs 22 stage
-    * cpu-s per 1M-geom cover): the pad/nlvl/explode chain stays inside
-    * ONE WholeStageCodegen span (generate nodes are codegen'd in Spark 4),
-    * so nothing materializes between steps, while the generator pays a
-    * generic UnsafeProjection whose array writes go element-by-element
-    * through boxed ArrayData fields. Kept measurable via GRAFT_COVER=gen. */
-  private def cellCoverSql(geoms: Dataset[SubGeom], cfg: SpatialConfig,
+    * A Catalyst chain, measured 5x faster than a hand-written
+    * mapPartitions generator at 1 core (4.2 vs 22 stage cpu-s per 1M-geom
+    * cover): the pad/nlvl/explode chain stays inside ONE WholeStageCodegen
+    * span (generate nodes are codegen'd in Spark 4), so nothing
+    * materializes between steps, while the generator paid a generic
+    * UnsafeProjection whose array writes went element-by-element through
+    * boxed ArrayData fields. */
+  private[engine] def cellCover(geoms: Dataset[SubGeom], cfg: SpatialConfig,
       activeLevels: Seq[Int]): (DataFrame, Long) = {
+    require(cfg.cellSize > 0, "cellCover needs a resolved cellSize")
     val padded = padDf(geoms.toDF(), cfg)
     val cs = cfg.cellSize
     val lvls = activeLevels.distinct.sorted
@@ -224,7 +208,7 @@ object SpatialJoin {
 
   /** Cover chain for the FUSED kernel: emits the packed 6-column shuffle
     * row (cell, gid, meta, enc, bb0, bb1) directly. Identical cell
-    * enumeration to [[cellCoverSql]]; the difference is WHERE the packing
+    * enumeration to [[cellCover]]; the difference is WHERE the packing
     * projection sits. meta/enc/bb0/bb1 depend only on per-geometry values,
     * so they are projected BELOW the explode chain and evaluate once per
     * sub-geometry — not once per cover row (~3x on the 1M-geom mix, and
@@ -303,105 +287,6 @@ object SpatialJoin {
     val (cfg2, lvls, _) = coverSpec(geoms, cfg)
     val (df, cs) = cellCover(geoms, cfg2, lvls)
     (df, cs, lvls)
-  }
-
-  private[engine] def cellCover(geoms: Dataset[SubGeom], cfg: SpatialConfig,
-      activeLevels: Seq[Int]): (DataFrame, Long) = {
-    require(cfg.cellSize > 0, "cellCover needs a resolved cellSize")
-    if (!sys.env.get("GRAFT_COVER").contains("gen"))
-      return cellCoverSql(geoms, cfg, activeLevels)
-    val cs = cfg.cellSize
-    val spark = geoms.sparkSession
-    val lvlsArr = activeLevels.distinct.sorted.toArray
-    val wd = cfg.withinDist
-    val schema = coverSchema
-    val w2 = WORLD_W / 2
-
-    val rdd = geoms.toDF().queryExecution.toRdd.mapPartitions { rows =>
-      import org.apache.spark.sql.catalyst.InternalRow
-      import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
-      val proj = UnsafeProjection.create(schema)
-      val out = new SpecificInternalRow(schema)
-      new Iterator[InternalRow] {
-        // enumeration state for the current input row
-        private var active = false
-        private var li = 0 // index into lvlsArr
-        private var nlvl = 0
-        private var pMinX = 0; private var pMinY = 0
-        private var pMaxX = 0; private var pMaxY = 0
-        private var cx = 0L; private var cy = 0L
-        private var cx1 = 0L; private var cy0 = 0L; private var cy1 = 0L
-        private var csL = 0.0
-
-        private def setupLevel(): Unit = {
-          val lvl = lvlsArr(li)
-          csL = (cs << (LEVEL_FACTOR_BITS * lvl)).toDouble
-          cx = math.floor((pMinX + w2) / csL).toLong
-          cx1 = math.floor((pMaxX + w2) / csL).toLong
-          cy0 = math.floor((pMinY + w2) / csL).toLong
-          cy1 = math.floor((pMaxY + w2) / csL).toLong
-          cy = cy0
-          out.setInt(12, lvl)
-        }
-
-        private def loadRow(): Unit = {
-          while (!active && rows.hasNext) {
-            val r = rows.next()
-            var minX = r.getInt(7); var minY = r.getInt(8)
-            var maxX = r.getInt(9); var maxY = r.getInt(10)
-            if (wd >= 0) {
-              // same arithmetic as the padDf UDF (reference
-              // getPaddedBoundingBox, Sweeper.h:350-388)
-              val f = math.max(
-                1.0 / Dist.distFactor(minY / Geo.PREC),
-                1.0 / Dist.distFactor(maxY / Geo.PREC))
-              val pad = math.ceil((wd / 2.0) * f * Geo.PREC).toInt
-              minX -= pad; minY -= pad; maxX += pad; maxY += pad
-            }
-            pMinX = minX; pMinY = minY; pMaxX = maxX; pMaxY = maxY
-            val w = math.max(maxX - minX, maxY - minY).toLong
-            nlvl = levelFor(w, cs)
-            li = 0
-            while (li < lvlsArr.length && lvlsArr(li) < nlvl) li += 1
-            if (li < lvlsArr.length) {
-              // row fields are valid until the next rows.next(); every
-              // emission projects (copies) before that happens
-              out.update(0, r.getUTF8String(0))
-              out.setInt(1, r.getInt(1)); out.setInt(2, r.getInt(2))
-              out.setInt(3, r.getInt(3)); out.setInt(4, r.getInt(4))
-              out.update(5, r.getArray(5)); out.update(6, r.getArray(6))
-              out.setInt(7, minX); out.setInt(8, minY)
-              out.setInt(9, maxX); out.setInt(10, maxY)
-              out.setInt(11, nlvl)
-              setupLevel()
-              active = true
-            }
-          }
-        }
-
-        override def hasNext: Boolean = { loadRow(); active }
-
-        override def next(): InternalRow = {
-          loadRow()
-          val cell = (lvlsArr(li).toLong << CELL_LVL_SHIFT) +
-            (cx + CELL_BIAS) * (1L << CELL_XY_BITS) + (cy + CELL_BIAS)
-          out.setLong(13, cell)
-          val res = proj(out)
-          // advance: cy, then cx, then the next active level
-          cy += 1
-          if (cy > cy1) {
-            cy = cy0; cx += 1
-            if (cx > cx1) {
-              li += 1
-              if (li < lvlsArr.length) setupLevel()
-              else active = false
-            }
-          }
-          res
-        }
-      }
-    }
-    (org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, schema), cs)
   }
 
   private def sideStruct(alias: String): Column = struct(
@@ -1041,232 +926,87 @@ object SpatialJoin {
     }
   }
 
-  /** Aggregate sub-pair flags into relations per (gidA, gidB), reproducing
-    * the reference's multiOut semantics (Sweeper.cpp:788-1059). Output:
-    * (a_id, predicate, b_id) in predicates mode; (a_id, matrix, b_id) in
-    * de9im mode; (a_id, dist, b_id) in distance mode. */
-  /** @param mayHaveBigMultis whether any geometry has more than 63 parts
-    *   (sub ids that overflow the 64-bit distinct-count masks). run()
-    *   derives it from max(nSubs); when false — every real dataset — the
-    *   typed-Aggregator fallback branch is not planned at all, so the
-    *   refine lineage executes exactly once and nothing needs caching. */
+  /** Aggregate sub-pair flag rows into relations per (gidA, gidB) with the
+    * reference's multiOut semantics (Sweeper.cpp:788-1059). Output:
+    * (a_id, predicate, b_id) in predicates mode; (a_id, de9im, b_id) in
+    * de9im mode; (a_id, dist, b_id) in distance mode.
+    *
+    * A thin adapter in front of the fused path's merge: [[partialRows]]
+    * maps each flag row to one partial row of the kernel's state schema,
+    * so both join paths share one merge and one verdict function
+    * ([[emissionMask]]). Adapter rows always go through the merge: after
+    * fanout canonicalisation one pair can carry two single-sub rows (self
+    * rows (T,R) and (R,T) both become (R,T)), so the kernel's single-sub
+    * shortcut does not hold for them.
+    *
+    * @param hadRefs unused; kept for source compatibility. */
   def aggregate(spark: SparkSession, flags: DataFrame,
-      cfg: SpatialConfig, hadRefs: Boolean = true,
-      mayHaveBigMultis: Boolean = false): DataFrame = {
-    import spark.implicits._
-    val pairFlags = flags.filter(col("gidA") =!= col("gidB"))
+      cfg: SpatialConfig, hadRefs: Boolean = true): DataFrame =
+    mergePartials(spark, partialRows(spark, flags, cfg), cfg,
+      singlesComplete = false)
 
-    // Both-direction emission is an EXPLODE over the one aggregated row,
-    // not a self-union: `fwd.union(agg.select(reversed))` planned the
-    // aggregate's whole input lineage once per branch, so the exact
-    // refinement + fanout were recomputed twice per query (guide §2.4 /
-    // §7.2 — two identical `Scan ExistingRDD` subtrees in the r5 plan).
-    //
-    // No final distinct() in any branch (r6; it was a full exchange +
-    // aggregation over the OUTPUT, the largest table of the job at scale):
-    // every output row is a function of exactly one (gidA, gidB) group —
-    // fanoutWith canonicalizes fanned fragments to gidA <= gidB in self
-    // mode (and the side discipline fixes orientation otherwise), the
-    // groupBy leaves one row per group, and each group's forward/reverse
-    // emissions differ in their (a_id, b_id) orientation — so the
-    // relation rows are duplicate-free by construction. Pinned by the
-    // full-suite fixture assertions and the exact-row-count hash oracles
-    // (a duplicate would inflate sp_rect_refs/rdist/mdist counts).
-    if (cfg.mode == "distance") {
-      val agg = pairFlags.groupBy(col("gidA"), col("gidB"))
-        .agg(min(col("dist")).as("dist"))
-      val rels =
-        if (cfg.selfJoin)
-          agg.select(explode(array(
-              struct(col("gidA").as("a_id"), col("dist"),
-                col("gidB").as("b_id")),
-              struct(col("gidB").as("a_id"), col("dist"),
-                col("gidA").as("b_id")))).as("r"))
-            .select(col("r.a_id"), col("r.dist"), col("r.b_id"))
-        else agg.select(col("gidA").as("a_id"), col("dist"),
-          col("gidB").as("b_id"))
-      return rels
-    }
+  /** Largest part count per geometry or alias that the merge state holds:
+    * nA/nB are 16-bit fields of the packed partial row (see aggRowSchema). */
+  final val MAX_PARTS = 0xffff
 
-    if (cfg.mode == "de9im") {
-      val merged = pairFlags
-        .filter(length(col("de9im")) === 9 || col("dist") === 0.0)
-        .as[FlagRow]
-        .groupByKey(f => (f.gidA, f.gidB))
-        .mapGroups { (key: (String, String), it: Iterator[FlagRow]) =>
-          val (ga, gb) = key
-          var m: Relate.Mat = null
-          var kindB = -2
-          it.foreach { f =>
-            val mat =
-              if (f.de9im.length == 9)
-                f.de9im.map { case 'F' => -1; case c => c - '0' }.toArray
-              else selfMat(f.kindB)
-            m = if (m == null) mat else Relate.merge(m, mat)
-            kindB = f.kindB
-          }
-          (ga, Relate.matToString(m), gb, Relate.matToString(Relate.transpose(m)))
+  /** Flag rows -> merge partial rows, one per row. Same-id rows (the
+    * fanout's unfanned self rows) are dropped. Predicates fold the row's
+    * flags and sub ids into an [[AggState]] and write it like the kernel
+    * does; de9im packs the matrix with [[packMat]] (fanout self rows carry
+    * none and take the self matrix of their kind); distance keeps the
+    * distance. */
+  private def partialRows(spark: SparkSession, flags: DataFrame,
+      cfg: SpatialConfig): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    val mode = cfg.mode
+    val schema = partialSchema(mode)
+    val selfPacked = Array(Relate.SELF_POINT, Relate.SELF_LINE,
+      Relate.SELF_AREA).map(packMat)
+    val ordered = flags.select(flagSchema.fieldNames.toIndexedSeq.map(col): _*)
+    val rdd = ordered.queryExecution.toRdd.mapPartitions { rows =>
+      import org.apache.spark.sql.catalyst.expressions.{SpecificInternalRow, UnsafeProjection}
+      val out = new SpecificInternalRow(schema)
+      val proj = UnsafeProjection.create(schema)
+      val s = new AggState
+      def project(r: InternalRow): InternalRow = {
+        out.update(0, r.getUTF8String(0))
+        out.update(1, r.getUTF8String(4))
+        if (mode == "distance") out.setDouble(2, r.getDouble(21))
+        else if (mode == "de9im") {
+          val m = r.getUTF8String(20)
+          val kindB = r.getInt(7)
+          out.setLong(2,
+            if (m.numBytes == 9) packMat(Array.tabulate(9)(i =>
+              "F012".indexOf(m.getByte(i).toInt) - 1))
+            else selfPacked(if (kindB == 0 || kindB == 1) kindB else 2))
+        } else {
+          s.reset()
+          s.nA = r.getInt(2); s.nB = r.getInt(6)
+          require(s.nA <= MAX_PARTS && s.nB <= MAX_PARTS,
+            s"${r.getUTF8String(0)} (${s.nA} parts) / ${r.getUTF8String(4)} " +
+              s"(${s.nB} parts): the relation merge holds at most $MAX_PARTS " +
+              "parts per geometry or alias")
+          val subA = r.getInt(1); val subB = r.getInt(5)
+          s.isect = r.getBoolean(8)
+          s.anyTouch = r.getBoolean(14); s.anyNotTouch = r.getBoolean(15)
+          s.anyLLCross = r.getBoolean(16)
+          s.anyLAab = r.getBoolean(17); s.anyLAba = r.getBoolean(18)
+          s.anyOverlap = r.getBoolean(19)
+          s.anyNotCross =
+            r.getBoolean(9) || r.getBoolean(10) || r.getBoolean(19)
+          if (r.getBoolean(9)) s.addSub(COV_A, subA)
+          if (r.getBoolean(10)) s.addSub(COV_B, subB)
+          if (r.getBoolean(11)) s.addSub(CONT_A, subA)
+          if (r.getBoolean(12)) s.addSub(CONT_B, subB)
+          if (r.getBoolean(13)) { s.addSub(EQ_A, subA); s.addSub(EQ_B, subB) }
+          writeAgg(out, s)
         }
-        .toDF("gidA", "mat", "gidB", "matT")
-      val rels =
-        if (cfg.selfJoin)
-          merged.select(explode(array(
-              struct(col("gidA").as("a_id"), col("mat").as("de9im"),
-                col("gidB").as("b_id")),
-              struct(col("gidB").as("a_id"), col("matT").as("de9im"),
-                col("gidA").as("b_id")))).as("r"))
-            .select(col("r.a_id"), col("r.de9im"), col("r.b_id"))
-        else merged.select(col("gidA").as("a_id"), col("mat").as("de9im"),
-          col("gidB").as("b_id"))
-      return rels
-    }
-
-    // ---------------------------------------------------------- predicates
-    // Persist only when the slow branch can exist (sub ids >= 64): it reads
-    // the flags a second time. DataFrame.persist copies field values into
-    // column batches, so the reused UnsafeRow from refine is safe to cache.
-    val flagsP =
-      if (mayHaveBigMultis)
-        pairFlags.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else pairFlags
-    // One-pass codegen aggregation: distinct-sub counting via 64-bit
-    // bit_or masks (sub ids < 64 cover all but pathological multis; those
-    // few pairs take a typed-Aggregator fallback). This stays inside
-    // whole-stage codegen — multi-countDistinct would EXPAND every row 7x,
-    // and a typed Aggregator drops the stage out of codegen entirely.
-    def any(c: Column): Column = max(c.cast("int")) === 1
-
-    val agg1 = flagsP.groupBy(col("gidA"), col("gidB")).agg(
-      max(col("nA")).as("nA"), max(col("nB")).as("nB"),
-      max(col("subA")).as("maxSubA"), max(col("subB")).as("maxSubB"),
-      any(col("isect")).as("isect"),
-      any(col("touch")).as("anyTouch"),
-      any(col("notTouch")).as("anyNotTouch"),
-      any(col("llCross")).as("anyLLCross"),
-      any(col("laCrossAB")).as("anyLAab"),
-      any(col("laCrossBA")).as("anyLAba"),
-      any(col("overlap")).as("anyOverlap"),
-      any(col("covAbyB") || col("covBbyA") || col("overlap"))
-        .as("anyNotCross"),
-      expr("bit_or(IF(covAbyB, shiftleft(1L, subA), 0L))").as("covAM"),
-      expr("bit_or(IF(covBbyA, shiftleft(1L, subB), 0L))").as("covBM"),
-      expr("bit_or(IF(contAinB, shiftleft(1L, subA), 0L))").as("contAM"),
-      expr("bit_or(IF(contBinA, shiftleft(1L, subB), 0L))").as("contBM"),
-      expr("bit_or(IF(subEq, shiftleft(1L, subA), 0L))").as("eqAM"),
-      expr("bit_or(IF(subEq, shiftleft(1L, subB), 0L))").as("eqBM"))
-
-    val fastOk = col("maxSubA") < 64 && col("maxSubB") < 64
-
-    val marked =
-      if (!mayHaveBigMultis) fastVerdicts(agg1)
-      else {
-        val fast = fastVerdicts(agg1.filter(fastOk))
-        // pathological multis (sub ids >= 64): exact typed aggregation over
-        // the persisted flags
-        val badKeys = agg1.filter(!fastOk).select(col("gidA").as("bk_a"),
-          col("gidB").as("bk_b"))
-        val slow = flagsP
-          .join(broadcast(badKeys), col("gidA") === col("bk_a") &&
-            col("gidB") === col("bk_b"), "left_semi")
-          .as[FlagRow]
-          .groupByKey(f => (f.gidA, f.gidB))
-          .agg(RelAgg.toColumn.name("r"))
-          .toDF("key", "r")
-          .select(
-            col("key._1").as("gidA"), col("key._2").as("gidB"),
-            col("r.isect").as("r_isect"),
-            col("r.coversAB").as("r_coversAB"),
-            col("r.coversBA").as("r_coversBA"),
-            col("r.containsAB").as("r_containsAB"),
-            col("r.containsBA").as("r_containsBA"),
-            col("r.equalsAB").as("r_equals"),
-            col("r.touchesAB").as("r_touches"),
-            col("r.crossesAB").as("r_crossesAB"),
-            col("r.crossesBA").as("r_crossesBA"),
-            col("r.overlapsAB").as("r_overlaps"))
-        fast.union(slow)
+        proj(out)
       }
-
-    // dedup = false even with refs: see the duplicate-free argument above
-    relsFrom(marked, cfg, dedup = false)
-  }
-
-  /** Verdict columns over an agg1-shaped row (counts from mask popcounts). */
-  private def verdictCols(covCntA: Column, covCntB: Column, contCntA: Column,
-      contCntB: Column, eqCntA: Column, eqCntB: Column): Seq[Column] = {
-    val coversAB = covCntB === col("nB")
-    val coversBA = covCntA === col("nA")
-    val partial = (covCntA > 0 && covCntA < col("nA")) ||
-      (covCntB > 0 && covCntB < col("nB"))
-    Seq(
-      col("isect").as("r_isect"),
-      coversAB.as("r_coversAB"), coversBA.as("r_coversBA"),
-      (contCntB === col("nB")).as("r_containsAB"),
-      (contCntA === col("nA")).as("r_containsBA"),
-      (col("nA") === col("nB") && eqCntA === col("nA") &&
-        eqCntB === col("nB")).as("r_equals"),
-      (col("anyTouch") && !col("anyNotTouch")).as("r_touches"),
-      ((col("anyLLCross") && !col("anyNotCross")) || col("anyLAab"))
-        .as("r_crossesAB"),
-      ((col("anyLLCross") && !col("anyNotCross")) || col("anyLAba"))
-        .as("r_crossesBA"),
-      ((col("anyOverlap") || partial) && !coversAB && !coversBA &&
-        !col("anyLLCross")).as("r_overlaps"))
-  }
-
-  private def fastVerdicts(in: DataFrame): DataFrame = in.select(
-    Seq(col("gidA"), col("gidB")) ++ verdictCols(
-      bit_count(col("covAM")).cast("long"),
-      bit_count(col("covBM")).cast("long"),
-      bit_count(col("contAM")).cast("long"),
-      bit_count(col("contBM")).cast("long"),
-      bit_count(col("eqAM")).cast("long"),
-      bit_count(col("eqBM")).cast("long")): _*)
-
-  /** (a_id, predicate, b_id) assembly from verdict-marked pair rows; in
-    * non-self mode only side-A-first rows survive (writeRel discipline,
-    * Sweeper.cpp:2287-2288) — the join ordered A=side0, B=side1. */
-  private def relsFrom(marked: DataFrame, cfg: SpatialConfig,
-      dedup: Boolean): DataFrame = {
-    val bothDirs = cfg.selfJoin
-    def rel(cond: Column, aId: Column, pred: String, bId: Column) =
-      when(cond, struct(aId.as("a_id"), lit(pred).as("predicate"),
-        bId.as("b_id")))
-
-    val A = col("gidA"); val B = col("gidB")
-    val relArray = array(
-      rel(col("r_isect"), A, "intersects", B),
-      rel(col("r_isect") && lit(bothDirs), B, "intersects", A),
-      rel(col("r_equals"), A, "equals", B),
-      rel(col("r_equals") && lit(bothDirs), B, "equals", A),
-      rel(col("r_coversAB"), A, "covers", B),
-      rel(col("r_coversBA") && lit(bothDirs), B, "covers", A),
-      rel(col("r_containsAB"), A, "contains", B),
-      rel(col("r_containsBA") && lit(bothDirs), B, "contains", A),
-      rel(col("r_touches"), A, "touches", B),
-      rel(col("r_touches") && lit(bothDirs), B, "touches", A),
-      // crosses: line/line both directions (with retraction); line/area
-      // crosses are folded in line-side-first with no retraction
-      // (reference writes those immediately, Sweeper.cpp:3017-3020)
-      rel(col("r_crossesAB"), A, "crosses", B),
-      rel(col("r_crossesBA") && lit(bothDirs), B, "crosses", A),
-      rel(col("r_overlaps"), A, "overlaps", B),
-      rel(col("r_overlaps") && lit(bothDirs), B, "overlaps", A))
-
-    // without refs each (a,pred,b) row originates from exactly one pair
-    // group and one array slot — no final distinct shuffle needed; alias
-    // fanout can mirror a pair into both orientations, so dedup then
-    val rels = marked
-      .select(explode(relArray).as("rel"))
-      .filter(col("rel").isNotNull)
-      .select(col("rel.a_id"), col("rel.predicate"), col("rel.b_id"))
-    if (dedup) rels.distinct() else rels
-  }
-
-  private def selfMat(kind: Int): Relate.Mat = kind match {
-    case 0 => Relate.SELF_POINT
-    case 1 => Relate.SELF_LINE
-    case _ => Relate.SELF_AREA
+      rows.filter(r => !r.getUTF8String(0).equals(r.getUTF8String(4)))
+        .map(project)
+    }
+    org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, schema)
   }
 
   // ------------------------------------------------------------ fused path
@@ -1283,13 +1023,14 @@ object SpatialJoin {
 
   import org.apache.spark.sql.types._
 
-  /** Packed partial-state row: the 8 flag booleans, maxSubA/maxSubB and
-    * nA/nB live in ONE long (the fused path caps nSubs at 63, so every
-    * field fits a byte) — 9 columns instead of 20 keeps the writeState
-    * projection, the merge shuffle, and the merge-stage decode narrow.
-    * Layout: bits 0-7 flags (isect, anyTouch, anyNotTouch, anyLLCross,
-    * anyLAab, anyLAba, anyOverlap, anyNotCross), 8-15 maxSubA, 16-23
-    * maxSubB, 24-31 nA, 32-39 nB. */
+  /** Packed partial-state row: the 8 flag booleans and nA/nB live in ONE
+    * long — 10 columns instead of 20 keeps the writeState projection, the
+    * merge shuffle, and the merge-stage decode narrow. Layout: bits 0-7
+    * flags (isect, anyTouch, anyNotTouch, anyLLCross, anyLAab, anyLAba,
+    * anyOverlap, anyNotCross), 8-23 nA, 24-39 nB (hence [[MAX_PARTS]]).
+    * The six sub masks hold sub ids < 64; `ovf` lists the sub ids >= 64 as
+    * (mask << 32 | sub) entries and is null otherwise — always null from
+    * the fused kernel, which runs only on inputs with at most 63 parts. */
   private val aggRowSchema = StructType(Seq(
     StructField("gidA", StringType, nullable = false),
     StructField("gidB", StringType, nullable = false),
@@ -1299,7 +1040,9 @@ object SpatialJoin {
     StructField("contAM", LongType, nullable = false),
     StructField("contBM", LongType, nullable = false),
     StructField("eqAM", LongType, nullable = false),
-    StructField("eqBM", LongType, nullable = false)))
+    StructField("eqBM", LongType, nullable = false),
+    StructField("ovf", ArrayType(LongType, containsNull = false),
+      nullable = true)))
 
   private val distRowSchema = StructType(Seq(
     StructField("gidA", StringType, nullable = false),
@@ -1313,6 +1056,13 @@ object SpatialJoin {
     StructField("gidB", StringType, nullable = false),
     StructField("mat", LongType, nullable = false)))
 
+  /** Partial-row schema the merge reads in each mode. */
+  private def partialSchema(mode: String): StructType = mode match {
+    case "distance" => distRowSchema
+    case "de9im" => de9imRowSchema
+    case _ => aggRowSchema
+  }
+
   private val de9imRelSchema = StructType(Seq(
     StructField("a_id", StringType, nullable = false),
     StructField("de9im", StringType, nullable = false),
@@ -1323,7 +1073,7 @@ object SpatialJoin {
     * '2'=111) so the reference's cellwise-MAX merge
     * (DE9IMatrix::operator+=, used Sweeper.cpp:823-856) becomes a
     * bitwise OR — the whole multi-sub merge stays one codegen'd
-    * bit_or aggregate instead of a typed mapGroups. */
+    * bit_or aggregate. */
   private[engine] def packMat(m: Relate.Mat): Long = {
     var p = 0L
     var i = 0
@@ -1372,20 +1122,22 @@ object SpatialJoin {
     StructField("dist", DoubleType, nullable = false),
     StructField("b_id", StringType, nullable = false)))
 
-  /** 14-slot relation emission mask from a pair's final state — the exact
-    * Scala port of [[verdictCols]] + [[relsFrom]]'s slot gating (slot 2k =
-    * predicate k A->B, slot 2k+1 = B->A, emitted only in self mode).
-    * States exist only for intersecting pairs, so the mask is never 0. */
+  /** 14-slot relation emission mask from a pair's final state (slot 2k =
+    * predicate k A->B, slot 2k+1 = B->A, emitted only in self mode) — the
+    * one place that turns merged state into predicates, for both join
+    * paths (reference multiOut, Sweeper.cpp:788-1059): covers/contains
+    * from per-side sub counts, equals from mutual-coverage counts,
+    * touches/crosses/overlaps with their retraction sets. States exist
+    * only for intersecting pairs, so the mask is never 0. */
   private def emissionMask(s: AggState, bothDirs: Boolean): Int = {
-    val covCntA = java.lang.Long.bitCount(s.covAM)
-    val covCntB = java.lang.Long.bitCount(s.covBM)
+    val covCntA = s.count(COV_A)
+    val covCntB = s.count(COV_B)
     val coversAB = covCntB == s.nB
     val coversBA = covCntA == s.nA
-    val containsAB = java.lang.Long.bitCount(s.contBM) == s.nB
-    val containsBA = java.lang.Long.bitCount(s.contAM) == s.nA
-    val equalsR = s.nA == s.nB &&
-      java.lang.Long.bitCount(s.eqAM) == s.nA &&
-      java.lang.Long.bitCount(s.eqBM) == s.nB
+    val containsAB = s.count(CONT_B) == s.nB
+    val containsBA = s.count(CONT_A) == s.nA
+    val equalsR = s.nA == s.nB && s.count(EQ_A) == s.nA &&
+      s.count(EQ_B) == s.nB
     val touches = s.anyTouch && !s.anyNotTouch
     val llCrossKept = s.anyLLCross && !s.anyNotCross
     val partialCov = (covCntA > 0 && covCntA < s.nA) ||
@@ -1494,26 +1246,69 @@ object SpatialJoin {
     * rewrites (the count the reference's RunStats reports). */
   @volatile var lastNumReferences: Long = 0L
 
-  /** Partial relation state per (gidA, gidB). */
+  /** Sub-mask indices of [[AggState.addSub]] / [[AggState.count]]. */
+  private final val COV_A = 0
+  private final val COV_B = 1
+  private final val CONT_A = 2
+  private final val CONT_B = 3
+  private final val EQ_A = 4
+  private final val EQ_B = 5
+
+  /** Partial relation state per (gidA, gidB). Sub ids < 64 live in the
+    * six inline masks; `big` holds the masks' sub ids >= 64 (aliases and
+    * multis with more than 63 parts, general path only) and is allocated
+    * when the first such id arrives. */
   private final class AggState {
-    var nA = 0; var nB = 0; var maxSubA = 0; var maxSubB = 0
+    var nA = 0; var nB = 0
     var isect = false; var anyTouch = false; var anyNotTouch = false
     var anyLLCross = false; var anyLAab = false; var anyLAba = false
     var anyOverlap = false; var anyNotCross = false
     var covAM = 0L; var covBM = 0L; var contAM = 0L; var contBM = 0L
     var eqAM = 0L; var eqBM = 0L
+    var big: Array[java.util.BitSet] = null
     var dist = Double.MaxValue
     var matL = 0L // de9im mode: packed matrix OR-merge (see packMat)
 
     def reset(): Unit = {
-      nA = 0; nB = 0; maxSubA = 0; maxSubB = 0
+      nA = 0; nB = 0
       isect = false; anyTouch = false; anyNotTouch = false
       anyLLCross = false; anyLAab = false; anyLAba = false
       anyOverlap = false; anyNotCross = false
       covAM = 0L; covBM = 0L; contAM = 0L; contBM = 0L
       eqAM = 0L; eqBM = 0L
+      big = null
       dist = Double.MaxValue
       matL = 0L
+    }
+
+    /** Mark sub id `sub` in sub mask `k` (COV_A .. EQ_B). */
+    def addSub(k: Int, sub: Int): Unit =
+      if (sub < 64) {
+        val b = 1L << sub
+        k match {
+          case COV_A => covAM |= b
+          case COV_B => covBM |= b
+          case CONT_A => contAM |= b
+          case CONT_B => contBM |= b
+          case EQ_A => eqAM |= b
+          case _ => eqBM |= b
+        }
+      } else {
+        if (big == null) big = Array.fill(6)(new java.util.BitSet)
+        big(k).set(sub)
+      }
+
+    /** Number of distinct sub ids in sub mask `k`. */
+    def count(k: Int): Int = {
+      val m = k match {
+        case COV_A => covAM
+        case COV_B => covBM
+        case CONT_A => contAM
+        case CONT_B => contBM
+        case EQ_A => eqAM
+        case _ => eqBM
+      }
+      java.lang.Long.bitCount(m) + (if (big == null) 0 else big(k).cardinality)
     }
   }
 
@@ -1526,8 +1321,9 @@ object SpatialJoin {
     }
   }
 
-  /** See aggRowSchema for the packed layout. */
-  private def packState(s: AggState): Long = {
+  /** Write a predicates-mode state into the aggRowSchema row `out`. */
+  private def writeAgg(out: org.apache.spark.sql.catalyst.InternalRow,
+      s: AggState): Unit = {
     var p = 0L
     if (s.isect) p |= 1L
     if (s.anyTouch) p |= 2L
@@ -1537,15 +1333,31 @@ object SpatialJoin {
     if (s.anyLAba) p |= 32L
     if (s.anyOverlap) p |= 64L
     if (s.anyNotCross) p |= 128L
-    p | s.maxSubA.toLong << 8 | s.maxSubB.toLong << 16 |
-      s.nA.toLong << 24 | s.nB.toLong << 32
+    out.setLong(2, p | s.nA.toLong << 8 | s.nB.toLong << 24)
+    out.setLong(3, s.covAM); out.setLong(4, s.covBM)
+    out.setLong(5, s.contAM); out.setLong(6, s.contBM)
+    out.setLong(7, s.eqAM); out.setLong(8, s.eqBM)
+    if (s.big == null) out.setNullAt(9)
+    else {
+      val ovf = scala.collection.mutable.ArrayBuilder.make[Long]
+      for (k <- 0 until 6) {
+        var i = s.big(k).nextSetBit(0)
+        while (i >= 0) {
+          ovf += k.toLong << 32 | i
+          i = s.big(k).nextSetBit(i + 1)
+        }
+      }
+      out.update(9, org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(ovf.result()))
+    }
   }
 
-  /** OR-merge one packed partial row (see aggRowSchema) into `s`. nA/nB
-    * are identical across rows of a pair; maxSub and the flag/mask fields
-    * are monotone, so max/OR reproduces the old groupBy agg exactly. */
-  private def mergePacked(s: AggState, p: Long,
+  /** OR-merge one aggRowSchema partial row into `s`. nA/nB are identical
+    * across rows of a pair; the flag and mask fields are monotone, so
+    * max/OR gives the same state in any merge order. */
+  private def mergePartial(s: AggState,
       r: org.apache.spark.sql.catalyst.InternalRow): Unit = {
+    val p = r.getLong(2)
     if ((p & 1L) != 0) s.isect = true
     if ((p & 2L) != 0) s.anyTouch = true
     if ((p & 4L) != 0) s.anyNotTouch = true
@@ -1554,22 +1366,27 @@ object SpatialJoin {
     if ((p & 32L) != 0) s.anyLAba = true
     if ((p & 64L) != 0) s.anyOverlap = true
     if ((p & 128L) != 0) s.anyNotCross = true
-    val mA = ((p >>> 8) & 0xff).toInt
-    val mB = ((p >>> 16) & 0xff).toInt
-    val nA = ((p >>> 24) & 0xff).toInt
-    val nB = ((p >>> 32) & 0xff).toInt
-    if (mA > s.maxSubA) s.maxSubA = mA
-    if (mB > s.maxSubB) s.maxSubB = mB
+    val nA = ((p >>> 8) & 0xffff).toInt
+    val nB = ((p >>> 24) & 0xffff).toInt
     if (nA > s.nA) s.nA = nA
     if (nB > s.nB) s.nB = nB
     s.covAM |= r.getLong(3); s.covBM |= r.getLong(4)
     s.contAM |= r.getLong(5); s.contBM |= r.getLong(6)
     s.eqAM |= r.getLong(7); s.eqBM |= r.getLong(8)
+    if (!r.isNullAt(9)) {
+      val ovf = r.getArray(9)
+      var i = 0
+      while (i < ovf.numElements()) {
+        val e = ovf.getLong(i)
+        s.addSub((e >>> 32).toInt, e.toInt)
+        i += 1
+      }
+    }
   }
 
   /** Fused pair generation + refinement + partial aggregation. Emits
-    * agg1-shaped partial rows (predicates) or (gidA,gidB,dist) partials
-    * (distance); [[aggregateFromPre]] merges them. */
+    * partial rows in [[partialSchema]] (packed state, matrix or distance
+    * per pair); [[aggregateFromPre]] merges them. */
   def fusedPairs(spark: SparkSession, geoms: Dataset[SubGeom],
       cfg: SpatialConfig, activeLevels: Seq[Int] = null,
       direct: Boolean = false, rowHint: Long = -1L,
@@ -1618,19 +1435,12 @@ object SpatialJoin {
     // every pair is complete after its one processPair (first-common-cell +
     // unique level), so the drain emits FINAL relation rows and the merge
     // shuffle never exists
+    val stateSchema = partialSchema(cfg.mode)
     val schema =
-      if (direct) {
-        if (distMode) distRelSchema
-        else if (de9imMode) de9imRelSchema
-        else relRowSchema
-      }
-      else if (distMode) distRowSchema
-      else if (de9imMode) de9imRowSchema
-      else aggRowSchema
-    val stateSchema =
-      if (distMode) distRowSchema
-      else if (de9imMode) de9imRowSchema
-      else aggRowSchema
+      if (!direct) stateSchema
+      else if (distMode) distRelSchema
+      else if (de9imMode) de9imRelSchema
+      else relRowSchema
 
     // narrow shuffle rows: UnsafeRow spends a full 8-byte word per field,
     // so the five small ints pack into one `meta` int (side b0, kind b1-2,
@@ -1638,30 +1448,11 @@ object SpatialJoin {
     // the geometry payload into one delta-varint binary (CoordCodec —
     // web-mercator coords are lz4-incompressible and were ~60% of the
     // shuffle bytes). cellCoverPacked projects these BELOW the explode
-    // chain so each evaluates once per sub-geometry, not per cover row;
-    // the GRAFT_COVER=gen measurement alternate keeps the per-cover-row
-    // packing over the generator's output (identical rows either way).
+    // chain so each evaluates once per sub-geometry, not per cover row.
     val (src, cs) =
       if (prePacked != null)
         (coverFromPacked(prePacked, cfg2.cellSize, lvls), cfg2.cellSize)
-      else if (!sys.env.get("GRAFT_COVER").contains("gen"))
-        cellCoverPacked(geoms, cfg2, lvls)
-      else {
-        val (exploded, cs0) = cellCover(geoms, cfg2, lvls)
-        val encCol = org.apache.spark.sql.GraftInternal.colOf(EncodeGeom(
-          org.apache.spark.sql.GraftInternal.exprOf(col("coords")),
-          org.apache.spark.sql.GraftInternal.exprOf(col("ringEnds"))))
-        (exploded.select(col("cell"), col("gid"),
-          (col("side") + col("kind") * 2 + col("nlvl") * 8 +
-            col("subId") * 256 + col("nSubs") * 65536).cast("int").as("meta"),
-          encCol.as("enc"),
-          (shiftleft(col("minX").cast("long"), 32)
-            .bitwiseOR(col("minY").cast("long").bitwiseAND(lit(0xffffffffL))))
-            .as("bb0"),
-          (shiftleft(col("maxX").cast("long"), 32)
-            .bitwiseOR(col("maxY").cast("long").bitwiseAND(lit(0xffffffffL))))
-            .as("bb1")), cs0)
-      }
+      else cellCoverPacked(geoms, cfg2, lvls)
     // explicit partition count: with a bare repartition(col) AQE coalesces
     // the 67 MB cell shuffle to ~6 partitions, which packs badly onto the
     // executor cores and loses skew headroom — kernel cost per row is far
@@ -1900,8 +1691,6 @@ object SpatialJoin {
           accDecided.add(1)
           val s = stateOf(a.gid, b.gid)
           s.nA = a.nSubs; s.nB = b.nSubs
-          if (a.subId > s.maxSubA) s.maxSubA = a.subId
-          if (b.subId > s.maxSubB) s.maxSubB = b.subId
           s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
           s.covBM |= 1L << b.subId
           s.contBM |= 1L << b.subId
@@ -1909,8 +1698,6 @@ object SpatialJoin {
           accDecided.add(1)
           val s = stateOf(a.gid, b.gid)
           s.nA = a.nSubs; s.nB = b.nSubs
-          if (a.subId > s.maxSubA) s.maxSubA = a.subId
-          if (b.subId > s.maxSubB) s.maxSubB = b.subId
           s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
           s.covAM |= 1L << a.subId
           s.contAM |= 1L << a.subId
@@ -1930,8 +1717,6 @@ object SpatialJoin {
               accDecided.add(1)
               val s = stateOf(a.gid, b.gid)
               s.nA = a.nSubs; s.nB = b.nSubs
-              if (a.subId > s.maxSubA) s.maxSubA = a.subId
-              if (b.subId > s.maxSubB) s.maxSubB = b.subId
               s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
               s.covAM |= 1L << a.subId
               s.contAM |= 1L << a.subId
@@ -1941,8 +1726,6 @@ object SpatialJoin {
               accDecided.add(1)
               val s = stateOf(a.gid, b.gid)
               s.nA = a.nSubs; s.nB = b.nSubs
-              if (a.subId > s.maxSubA) s.maxSubA = a.subId
-              if (b.subId > s.maxSubB) s.maxSubB = b.subId
               s.isect = true; s.anyNotTouch = true; s.anyNotCross = true
               s.covBM |= 1L << b.subId
               s.contBM |= 1L << b.subId
@@ -1965,8 +1748,6 @@ object SpatialJoin {
           if (r.isect) {
             val s = stateOf(a.gid, b.gid)
             s.nA = a.nSubs; s.nB = b.nSubs
-            if (a.subId > s.maxSubA) s.maxSubA = a.subId
-            if (b.subId > s.maxSubB) s.maxSubB = b.subId
             s.isect = true
             if (r.touches) s.anyTouch = true
             if (r.interiorIsect) s.anyNotTouch = true
@@ -2027,12 +1808,7 @@ object SpatialJoin {
         out.update(1, k.b)
         if (distMode) out.setDouble(2, s.dist)
         else if (de9imMode) out.setLong(2, s.matL)
-        else {
-          out.setLong(2, packState(s))
-          out.setLong(3, s.covAM); out.setLong(4, s.covBM)
-          out.setLong(5, s.contAM); out.setLong(6, s.contBM)
-          out.setLong(7, s.eqAM); out.setLong(8, s.eqBM)
-        }
+        else writeAgg(out, s)
         proj(out)
       }
 
@@ -2148,20 +1924,30 @@ object SpatialJoin {
     org.apache.spark.sql.GraftInternal.internalDf(spark, rdd, schema)
   }
 
-  /** Merge fused partials and assemble relations. */
+  /** Merge fused-kernel partials and assemble relations. */
   def aggregateFromPre(spark: SparkSession, pre: DataFrame,
-      cfg: SpatialConfig): DataFrame = {
-    // NO distinct() in these two finalizations (unlike the general path's
-    // aggregate, whose refs-fanout input can seed a pair in both
-    // orientations): kernel emission is pair-canonical — processPair
-    // orders (a,b) by gid for self joins and by side otherwise, and a==b
-    // never reaches the map — so the groupBy leaves exactly one row per
-    // unordered pair and the reversed self-join projection is disjoint
-    // from fwd. The old distinct() was a second full exchange over the
-    // ENTIRE relation output, the biggest dataset in the job at scale.
-    // both directions via explode, not a self-union: the union planned the
-    // merge aggregate once per branch (double read of the kernel shuffle
-    // plus a second full aggregation pass) — see aggregate()'s note
+      cfg: SpatialConfig): DataFrame =
+    mergePartials(spark, pre, cfg, singlesComplete = true)
+
+  /** The one relation merge of both join paths: partial rows in
+    * [[partialSchema]] -> relation rows.
+    *
+    * @param singlesComplete a partial with nA == nB == 1 is the pair's only
+    *   row, so the hash merge emits it without a map insert. True for
+    *   fused-kernel partials (processPair reports each sub pair once);
+    *   false for [[aggregate]]'s adapter rows. */
+  private def mergePartials(spark: SparkSession, pre: DataFrame,
+      cfg: SpatialConfig, singlesComplete: Boolean): DataFrame = {
+    // NO distinct() in these finalizations: every input row belongs to
+    // one pair-canonical (gidA, gidB) group — the kernel orders (a,b) by
+    // gid for self joins and by side otherwise, fanoutWith canonicalizes
+    // fanned rows to gidA <= gidB (the side discipline fixes orientation
+    // in non-self mode), and a == b never reaches the merge — so the
+    // group leaves exactly one row per unordered pair and the reversed
+    // self-join emission is disjoint from the forward one.
+    // Both directions via explode, not a self-union: the union planned the
+    // merge aggregate once per branch (double read of the merge shuffle
+    // plus a second full aggregation pass).
     if (cfg.mode == "distance") {
       val agg = pre.groupBy(col("gidA"), col("gidB"))
         .agg(min(col("dist")).as("dist"))
@@ -2178,8 +1964,7 @@ object SpatialJoin {
     if (cfg.mode == "de9im") {
       // the unary-packed matrix (see packMat) makes the multi-sub merge a
       // plain bit_or hash aggregate and the string decode a codegen'd
-      // projection — the whole stage stays in whole-stage codegen (the old
-      // general-path groupByKey.mapGroups decoded strings per row)
+      // projection — the whole stage stays in whole-stage codegen
       val agg = pre.groupBy(col("gidA"), col("gidB"))
         .agg(expr("bit_or(mat)").as("mat"))
       return if (cfg.selfJoin)
@@ -2195,18 +1980,18 @@ object SpatialJoin {
           matStrCol("mat", transposed = false).as("de9im"),
           col("gidB").as("b_id"))
     }
-    // one hash exchange on the pair key, then a streaming merge: rows of
-    // complete pairs (nA==1 && nB==1 — exactly one kernel row exists for
-    // them) expand to relation rows with NO map insert; only pairs with a
-    // multi-sub side (minority class) are merged in a map and finalized
-    // when the partition's input is exhausted. Replaces the 18-expression
-    // two-stage hash agg + verdict projection + explode.
+    // one hash exchange on the pair key, then a streaming merge: with
+    // singlesComplete, rows of complete pairs (nA==1 && nB==1 — exactly one
+    // kernel row exists for them) expand to relation rows with NO map
+    // insert; all other rows are merged in a map and finalized when the
+    // partition's input is exhausted.
     //
     // MEMORY BOUND / MERGE STRATEGY: the hash merge (default) holds one
-    // ~100-byte entry per DISTINCT multi-sub pair of the partition (never
-    // the single-sub majority, and kernel partitions scale with input size
-    // via rowHint). For inputs whose pairs are overwhelmingly
-    // multi×multi-geometry, `graft.merge=sort` (conf or GRAFT_MERGE env)
+    // ~100-byte entry per DISTINCT map-merged pair of the partition (for
+    // kernel partials never the single-sub majority, and kernel partitions
+    // scale with input size via rowHint; for the general path every pair).
+    // For inputs whose pairs are overwhelmingly multi×multi-geometry, or
+    // large general-path joins, `graft.merge=sort` (conf or GRAFT_MERGE env)
     // selects a sort-based merge instead: Tungsten sorts the partials by
     // pair key (spilling gracefully at any size) and the merge keeps O(1)
     // group state. Same output, verified by EngineOpsSpec.
@@ -2237,7 +2022,7 @@ object SpatialJoin {
               val r = rows.next()
               val a = r.getUTF8String(0); val b = r.getUTF8String(1)
               if (open && a.equals(curA) && b.equals(curB))
-                mergePacked(cur, r.getLong(2), r)
+                mergePartial(cur, r)
               else {
                 val hadGroup = open
                 val m = if (hadGroup) emissionMask(cur, selfJoin) else 0
@@ -2245,7 +2030,7 @@ object SpatialJoin {
                 cur.reset()
                 curA = a.clone(); curB = b.clone()
                 open = true
-                mergePacked(cur, r.getLong(2), r)
+                mergePartial(cur, r)
                 if (hadGroup) em.load(pa, pb, m)
               }
             }
@@ -2267,9 +2052,10 @@ object SpatialJoin {
                 else {
                   val r = rows.next()
                   val p = r.getLong(2)
-                  if ((p >>> 24 & 0xff) == 1 && (p >>> 32 & 0xff) == 1) {
+                  if (singlesComplete &&
+                      (p >>> 8 & 0xffff) == 1 && (p >>> 24 & 0xffff) == 1) {
                     tmp.reset()
-                    mergePacked(tmp, p, r)
+                    mergePartial(tmp, r)
                     // em borrows the row's UTF8Strings; the input row is not
                     // advanced until the emitter drains, and writeNext copies
                     // the bytes into the projection buffer
@@ -2282,7 +2068,7 @@ object SpatialJoin {
                       s = new AggState
                       pmap.put(new PKey(probe.a.clone(), probe.b.clone()), s)
                     }
-                    mergePacked(s, p, r)
+                    mergePartial(s, r)
                   }
                 }
               } else {
@@ -2305,8 +2091,9 @@ object SpatialJoin {
   def run(spark: SparkSession, geoms: Dataset[SubGeom],
       refs: Dataset[RefEdge], cfg: SpatialConfig = SpatialConfig())
       : DataFrame = {
-    // typed-Aggregator groups number in the millions: keep
-    // ObjectHashAggregate in hash mode instead of its 128-key sort fallback
+    // collect_list groups (dupEdges, the distributed fanout's closure)
+    // number in the millions: keep ObjectHashAggregate in hash mode
+    // instead of its 128-key sort fallback
     val fbKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
     if (spark.conf.getOption(fbKey).forall(_.toLong < (1 << 22)))
       spark.conf.set(fbKey, (1 << 22).toString)
@@ -2519,8 +2306,7 @@ object SpatialJoin {
       // tables by now; the expansion caches are dead — the r5 code leaked
       // the expansion on this branch (ADVICE r5)
       releaseRefCaches()
-      return aggregate(spark, fanned, cfgCs, hadRefs = true,
-        mayHaveBigMultis = bigMultis)
+      return aggregate(spark, fanned, cfgCs, hadRefs = true)
     }
     val edges = authoredEdges ++ autoEdges
     // the driver array is materialized; the cached expansion served its
@@ -2547,17 +2333,9 @@ object SpatialJoin {
       else aggregateFromPre(spark,
         fusedPairs(spark, g, cfgCs, lvls, rowHint = nRows), cfgCs)
     }
-    {
-      val cands = candidates(spark, g, cfgCs, lvls)
-      val flags = refine(spark, cands, cfgCs)
-      if (edges.isEmpty)
-        aggregate(spark, flags, cfgCs, hadRefs = false,
-          mayHaveBigMultis = bigMultis)
-      else {
-        val fanned = fanout(spark, flags, edges, g, cfgCs)
-        aggregate(spark, fanned, cfgCs, hadRefs = true,
-          mayHaveBigMultis = bigMultis)
-      }
-    }
+    // general path (alias edges or >63-part multis); fanout is the
+    // identity without edges
+    val flags = refine(spark, candidates(spark, g, cfgCs, lvls), cfgCs)
+    aggregate(spark, fanout(spark, flags, edges, g, cfgCs), cfgCs)
   }
 }

@@ -543,7 +543,7 @@ object SpatialQueries {
   // union coverage coincide), interiors-intersect = any open part
   // overlap, touches = contact without interior overlap, equals =
   // MULTISET part equality both ways with equal part counts (the
-  // reference's per-sub rule, RelAgg.scala:94 — not union equality).
+  // reference's per-sub rule, RelAgg.scala:74 — not union equality).
   private val mDx10 = Array(0, 0, 0, 1, 2, 1)
   private val mDy10 = Array(0, 0, 0, 0, 0, 0)
   private val mDx20 = Array(2, 2, 2, 2, 4, 5)
@@ -782,7 +782,7 @@ object SpatialQueries {
     * interesting A9+A3 interplay: v7 covers-and-is-covered-by v0 (every
     * sub covered each way, combined across the two fanout targets) yet is
     * NOT equal to it — the reference's equals rule is per-sub equality
-    * with equal sub counts (RelAgg.scala:94, mirrored in the twin's
+    * with equal sub counts (RelAgg.scala:74, mirrored in the twin's
     * multiset rule), not point-set-union equality, and v7 has two subs to
     * v0's one. dupMinPoints = 0 forces every exact duplicate (v4, and
     * every cross-generation repeat of a cell slot) through the P9

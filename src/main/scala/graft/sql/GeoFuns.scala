@@ -11,15 +11,17 @@ import graft.geom.{Dist, Geo, PairRel, Relate, Wkt}
   * call (top-level object => static forwarders), so the Catalyst
   * expressions in [[exprs]] stay inside whole-stage codegen.
   *
-  * Semantics are the ENGINE's, not a second implementation: WKT parsing is
-  * [[Wkt.parseWkt]], per-sub-pair refinement is [[Relate.relate]], and the
-  * multi-geometry aggregation folds the same [[FlagRow]] records through
-  * the production [[RelAgg]] aggregator the join path uses for pathological
-  * multis (reference semantics: src/spatialjoin/Sweeper.cpp:788-1059). The
-  * scalar functions therefore agree row-for-row with the distributed join
-  * (pinned by SqlFunctionsSpec's brute-force-vs-engine differential), while
-  * the join remains the scale path — these are for ad-hoc SQL filters and
-  * projections.
+  * WKT parsing is [[Wkt.parseWkt]] and per-sub-pair refinement is
+  * [[Relate.relate]], as in the engine. The multi-geometry aggregation
+  * folds the refine stage's [[FlagRow]] records through [[RelAgg]], a
+  * plain fold that the join does NOT use (the join merges packed partial
+  * states, SpatialJoin.emissionMask): it is kept deliberately independent
+  * of the join's merge, so that [[verdict]] can serve as the brute-force
+  * oracle of the join's multi-geometry semantics (reference:
+  * src/spatialjoin/Sweeper.cpp:788-1059). The scalar functions agree
+  * row-for-row with the distributed join (pinned by SqlFunctionsSpec's
+  * brute-force-vs-engine differential), while the join remains the scale
+  * path — these are for ad-hoc SQL filters and projections.
   *
   * Invalid or empty WKT: predicates return false, `relate` returns null,
   * `distance`/`area`/`length` return NaN (primitive-friendly sentinels that

@@ -20,7 +20,7 @@ import scala.io.Source
   *     distance modes, `<refs>` fanout, MULTI* collections, non-self side
   *     discipline),
   *   - a SynthGeo self-join through `run()` (fused kernel direct path),
-  *   - fused-vs-general differential INSIDE the cluster,
+  *   - fused-vs-general pair generation differential INSIDE the cluster,
   *   - kNN (per-round `localCheckpoint` whose blocks live on executors),
   *   - connected components (iterative `localCheckpoint` fixpoint).
   *
@@ -139,8 +139,10 @@ class ClusterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
     rowSet(graft.ops.ConnectedComponents.run(ccEdges.toDF("a", "b")))
   }
 
-  /** Fused kernel vs general candidates+refine+aggregate, both in-cluster:
-    * the DifferentialSoak invariant under real executor JVMs. */
+  /** Fused kernel vs general candidates+refine, both in-cluster: the
+    * DifferentialSoak invariant under real executor JVMs. Both arms end in
+    * the same relation merge, so this checks pair generation and exact
+    * refinement. */
   private def soakLeg(s: SparkSession): Option[String] = {
     import s.implicits._
     def rels(df: DataFrame): Set[String] =
@@ -154,7 +156,7 @@ class ClusterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
       val general = rels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s,
           SpatialJoin.candidates(s, geoms, cfg, lvls), cfg),
-        cfg, hadRefs = false, mayHaveBigMultis = false))
+        cfg))
       if (fused == general && fused.nonEmpty) None
       else Some(s"fusedOnly=${(fused -- general).take(3)} " +
         s"generalOnly=${(general -- fused).take(3)} n=${fused.size}")
@@ -233,7 +235,7 @@ class ClusterParitySpec extends AnyFunSuite with BeforeAndAfterAll {
         s"diff=${(cSynth diff local).take(3)} ${(local diff cSynth).take(3)}")
   }
 
-  test("fused and general paths agree inside the cluster") {
+  test("fused and general pair generation agree inside the cluster") {
     assert(cSoak.isEmpty, cSoak.getOrElse(""))
   }
 

@@ -2,9 +2,11 @@ package graft.engine
 
 import org.apache.spark.sql.SparkSession
 
-/** Differential soak: fused kernel vs general candidates+refine+aggregate
-  * on SynthGeo inputs at arbitrary (seed, n) — a bug hunt beyond the fixed
-  * (42, 4000) instance the suite pins. Run:
+/** Differential soak: fused kernel vs general candidates+refine on
+  * SynthGeo inputs at arbitrary (seed, n) — a bug hunt beyond the fixed
+  * (42, 4000) instance the suite pins. Both arms end in the same relation
+  * merge (aggregate adapts flag rows to the kernel's partial rows), so the
+  * soak checks pair generation and exact refinement. Run:
   *
   *   sbt "Test/runMain graft.engine.DifferentialSoak <n> <seed> [<seed>...]"
   *
@@ -52,8 +54,8 @@ object DifferentialSoak {
         maxX = g.maxX + dx, maxY = g.maxY + dy)
     }
     // third leg: NON-SELF side discipline (sides assigned by gid hash) —
-    // exercises the fused kernel's side ordering + the general path's side
-    // predicate beyond the fixed brandenburg fixtures
+    // exercises the fused kernel's side ordering + the candidates join's
+    // side predicate beyond the fixed brandenburg fixtures
     val dx = -graft.geom.Geo.projX(10.0) // center of SynthGeo's lon band
     val dy = -graft.geom.Geo.projY(51.0) // center of its lat band
     for (seed <- seeds;
@@ -62,9 +64,8 @@ object DifferentialSoak {
            (SpatialConfig(dupMinPoints = -1), true),
            (SpatialConfig(mode = "distance", withinDist = 2500,
              dupMinPoints = -1), false),
-           // de9im through the fused kernel (packed-matrix bit_or merge)
-           // vs the general path's exact matrices — protects the round-3
-           // fused-de9im rewrite beyond the fixed de9im fixtures
+           // de9im: the kernel's in-map matrix merge vs the general
+           // path's per-sub-pair matrices — beyond the fixed de9im fixtures
            (SpatialConfig(mode = "de9im", dupMinPoints = -1), false),
            (SpatialConfig(selfJoin = false, dupMinPoints = -1), false))) {
       val base0 = SynthGeo.dataset(spark, n, seed)
@@ -80,7 +81,7 @@ object DifferentialSoak {
       val general = rels(SpatialJoin.aggregate(spark,
         SpatialJoin.refine(spark,
           SpatialJoin.candidates(spark, geoms, cfg, lvls), cfg),
-        cfg, hadRefs = false, mayHaveBigMultis = false), mode)
+        cfg), mode)
       val ok = fused == general && fused.nonEmpty
       val tag = (if (cfg0.selfJoin) cfg0.mode else s"${cfg0.mode}-nonself") +
         (if (shift) "-straddle00" else "")

@@ -594,13 +594,14 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("fused kernel == general candidates+refine+aggregate pipeline") {
-    // the engine has two independent physical pipelines for the same
-    // semantics: the fused kernel (dominant path) and the general
-    // SMJ+refine+aggregate path (de9im / refs / >63-part multis). Their
+  test("fused kernel == general candidates+refine pair generation") {
+    // the engine generates and refines pairs two ways: the fused kernel
+    // (dominant path) and the general SMJ candidates + refine path (refs /
+    // >63-part multis). Both end in the same relation merge, so their
     // outputs must be IDENTICAL on the same input — this differential
-    // catches fusion bugs (pair dedup, level-visitor discipline, partial
-    // aggregation) that fixture assertions on either path alone would miss.
+    // catches pair-generation bugs (pair dedup, level-visitor discipline,
+    // in-kernel partial states) that fixture assertions on either path
+    // alone would miss.
     val s = spark
     def rels(df: org.apache.spark.sql.DataFrame): Set[(String, String, String)] =
       df.collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -621,7 +622,7 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         .selectExpr("a_id", s"cast(${valCol(cfg)} as string)", "b_id"))
       val general = rels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s, SpatialJoin.candidates(s, geoms, cfg, lvls),
-          cfg), cfg, hadRefs = false, mayHaveBigMultis = false)
+          cfg), cfg)
         .selectExpr("a_id", s"cast(${valCol(cfg)} as string)", "b_id"))
       assert(fused == general,
         s"mode=${cfg0.mode} fusedOnly=${(fused -- general).take(5)} " +
@@ -660,6 +661,69 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     geoms.unpersist()
   }
 
+  test("alias with more than 63 targets == the same points as one MULTIPOINT") {
+    // an alias takes one slot per target through the fanout; slots >= 64
+    // must count in the merge exactly like the parts of a multi-geometry
+    // (a 64-bit sub mask wraps at slot 64 and loses coverage counts). The
+    // two inputs run separately: a >63-part MULTIPOINT in the alias input
+    // would change how the alias input's merge is planned.
+    val s = spark
+    def fmt(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+    def relsOf(id: String, lines: Seq[String], mode: String) = {
+      val (geoms, refs) = Model.parseLines(s,
+        s.createDataset(lines)(org.apache.spark.sql.Encoders.STRING))
+      SpatialJoin.run(s, geoms, refs,
+        SpatialConfig(mode = mode, dupMinPoints = -1)).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        .collect {
+          case (a, m, b) if a == id => ("X", m, b)
+          case (a, m, b) if b == id => (a, m, "X")
+        }.toSet
+    }
+    for (n <- Seq(63, 64, 65, 70, 300); mode <- Seq("predicates", "de9im")) {
+      val pts = (0 until n).map(i =>
+        s"${fmt(10.001 + (i % 20) * 0.004)} ${fmt(50.001 + (i / 20) * 0.004)}")
+      val base =
+        Seq("P\tPOLYGON((10 50, 10.1 50, 10.1 50.1, 10 50.1, 10 50))") ++
+          pts.zipWithIndex.map { case (p, i) => s"p$i\tPOINT($p)" }
+      val r = relsOf("R",
+        base :+ s"R\t<${(0 until n).map("p" + _).mkString(",")}>", mode)
+      val m = relsOf("M", base :+ s"M\tMULTIPOINT(${pts.mkString(", ")})", mode)
+      assert((r -- m).isEmpty && (m -- r).isEmpty,
+        s"n=$n mode=$mode aliasOnly=${(r -- m).take(5)} " +
+          s"multiOnly=${(m -- r).take(5)}")
+      if (mode == "predicates")
+        assert(m.contains(("P", "contains", "X")), s"n=$n: $m")
+      else assert(m.exists(t => t._1 == "P" && t._3 == "X"), s"n=$n: $m")
+    }
+  }
+
+  test("relation merge bound: MAX_PARTS parts join, one more is rejected") {
+    // nA/nB are 16-bit fields of the merge's packed partial row; a part
+    // count past the bound must fail loudly instead of wrapping
+    val s = spark
+    def fmt(v: Double) = "%.4f".formatLocal(java.util.Locale.ROOT, v)
+    def pt(i: Int) =
+      s"${fmt(10 + (i % 256) * 1e-4)} ${fmt(50 + (i / 256) * 1e-4)}"
+    def join(n: Int) = {
+      val lines = Seq(
+        s"M\t${(0 until n).map(pt).mkString("MULTIPOINT(", ", ", ")")}",
+        s"p\tPOINT(${pt(n - 1)})")
+      val (geoms, refs) = Model.parseLines(s,
+        s.createDataset(lines)(org.apache.spark.sql.Encoders.STRING))
+      SpatialJoin.run(s, geoms, refs, SpatialConfig(dupMinPoints = -1))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
+    }
+    assert(join(SpatialJoin.MAX_PARTS).toSet ==
+      Set(("M", "intersects", "p"), ("p", "intersects", "M"),
+        ("M", "covers", "p"), ("M", "contains", "p")))
+    val e = intercept[Exception](join(SpatialJoin.MAX_PARTS + 1))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).toList
+    assert(msgs.exists(m => m != null &&
+      m.contains(s"at most ${SpatialJoin.MAX_PARTS} parts")), msgs)
+  }
+
   test("sort-based merge == hash merge == general path on multi-geometries") {
     // the merge stage's two strategies (hash map vs sorted O(1)-state
     // groups, graft.merge=sort) must agree on inputs where pairs actually
@@ -689,15 +753,15 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       finally s.conf.unset("graft.merge")
       val general = rels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s, SpatialJoin.candidates(s, geoms, cfg, lvls),
-          cfg), cfg, hadRefs = false, mayHaveBigMultis = false))
+          cfg), cfg))
       assert(hashM == general, s"$ds hash merge diverges: " +
         s"+${(hashM -- general).take(5)} -${(general -- hashM).take(5)}")
       assert(sortM == general, s"$ds sort merge diverges: " +
         s"+${(sortM -- general).take(5)} -${(general -- sortM).take(5)}")
       assert(hashM.nonEmpty)
-      // de9im on the same multi-sub fixtures: the fused kernel's unary
-      // bit_or matrix merge must equal the general path's cellwise-max
-      // mapGroups merge on pairs whose sub-matrices really merge
+      // de9im on the same multi-sub fixtures: the kernel's in-map matrix
+      // merge + bit_or must equal the merge of the general path's per-sub-
+      // pair matrices on pairs whose sub-matrices really merge
       def matRels(df: org.apache.spark.sql.DataFrame) =
         df.selectExpr("a_id", "cast(de9im as string)", "b_id")
           .collect().map(r => (r.getString(0), r.getString(1), r.getString(2)))
@@ -707,19 +771,46 @@ class EngineOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
         SpatialJoin.fusedPairs(s, geoms, dCfg, lvls), dCfg))
       val dGeneral = matRels(SpatialJoin.aggregate(s,
         SpatialJoin.refine(s, SpatialJoin.candidates(s, geoms, dCfg, lvls),
-          dCfg), dCfg, hadRefs = false, mayHaveBigMultis = false))
+          dCfg), dCfg))
       assert(dFused == dGeneral, s"$ds de9im fused/general diverge: " +
         s"+${(dFused -- dGeneral).take(5)} -${(dGeneral -- dFused).take(5)}")
       assert(dFused.nonEmpty)
       geoms.unpersist()
     }
+    // alias fixture: run() takes the general path, whose adapter rows go
+    // through the same merge — both strategies must agree there too, in
+    // predicates and de9im mode (dupMinPoints = 0 adds duplicate aliases)
+    val refLines = scala.io.Source.fromInputStream(
+      getClass.getResourceAsStream("/datasets/references"), "UTF-8")
+      .getLines().toSeq
+    val (rGeoms, rRefs) = Model.parseLines(s,
+      s.createDataset(refLines)(org.apache.spark.sql.Encoders.STRING))
+    for (mode <- Seq("predicates", "de9im")) {
+      def runRels() = {
+        val rows = SpatialJoin.run(s, rGeoms, rRefs,
+          SpatialConfig(mode = mode, dupMinPoints = 0)).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+        // one row per relation: a single-target alias's fanned self rows
+        // (T,R) and (R,T) reach the merge as two single-sub rows of one
+        // pair, and must merge rather than both emit
+        assert(rows.length == rows.distinct.length,
+          s"$mode: ${rows.length} rows, ${rows.distinct.length} distinct")
+        rows.toSet
+      }
+      val hashR = runRels()
+      s.conf.set("graft.merge", "sort")
+      val sortR = try runRels() finally s.conf.unset("graft.merge")
+      assert(hashR == sortR, s"references $mode sort merge diverges: " +
+        s"+${(sortR -- hashR).take(5)} -${(hashR -- sortR).take(5)}")
+      assert(hashR.exists(t => t._1 != t._3))
+    }
   }
 
   test("cellCover generator matches an independent enumeration") {
-    // the cover feeds BOTH join paths; this pins the generator (pad, nlvl,
-    // level filter, cell-range loops, key packing) against a plain-Scala
-    // re-derivation from the documented semantics, on real fixture
-    // geometries, in predicates AND distance mode
+    // the cover feeds BOTH join paths; this pins cellCover's Catalyst
+    // chain (pad, nlvl, level filter, cell ranges, key packing) against a
+    // plain-Scala re-derivation from the documented semantics, on real
+    // fixture geometries, in predicates AND distance mode
     val s = spark
     import s.implicits._
     import graft.geom.{Dist, Geo}
